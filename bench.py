@@ -11,7 +11,10 @@ Prints ONE JSON line:
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default: the CPUs this
+      process may run on, os.sched_getaffinity)
+  SPARK_GRAFT_DRIVER_MEM  spark.driver.memory (default: a quarter of
+      MemTotal, in MiB)
   SPARK_GRAFT_BENCH_N  frontier rows (default 1_000_000)
   SPARK_GRAFT_BENCH_HOSTS  host universe (default 10_000)
   SPARK_GRAFT_BENCH_CRAWL_REPS  crawl reps, median reported (default 3
@@ -50,6 +53,15 @@ _FAIR_XML = os.path.join(
 )
 
 
+def default_driver_mem() -> str:
+    """A quarter of MemTotal (/proc/meminfo), as a Spark size string."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 4 // 1024}m"
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -73,7 +85,7 @@ def build_spark(cpus: int):
         .config("spark.network.maxRemoteBlockSizeFetchToMem", "64m")
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
         )
         # local-cluster's mem_mb sizes the WORKER's resource pool; the
         # executor JVM heap still comes from spark.executor.memory
@@ -203,7 +215,7 @@ def relational_bench(spark, sf_dir: str, reps: int = 3) -> dict:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     n_rows = int(os.environ.get("SPARK_GRAFT_BENCH_N", "1000000"))
     n_hosts = int(os.environ.get("SPARK_GRAFT_BENCH_HOSTS", "10000"))
 

@@ -9,9 +9,13 @@ maintained as … state tables at 10^10-URL scale".  Design:
     bitmap sidecar, versioned like every other state table
     (``bloom/v=<n>/shard-<k>.npy``) and committed under the same
     manifest (SPEC-12 resume covers it);
-  * per wave, the NEW seen URLs are partitioned by shard and each task
-    ORs its shard's new bits into the previous version's bitmap
-    (incremental; write = O(new urls + bitmap));
+  * per wave, the NEW seen URLs are hash-partitioned by shard into
+    min(n_shards, spark.sql.shuffle.partitions) tasks — one per core,
+    not one per shard, because each Python task costs far more in
+    launch overhead than its shard work.  Every task owns WHOLE shards:
+    it ORs each owned shard's new bits into the previous version's
+    bitmap and publishes it (incremental; write = O(new urls +
+    bitmap)), so every shard file still has exactly one writer;
   * the probe is fused into the fetch/extract Arrow stage
     (``probe_pandas``): each worker lazily caches the shard bitmaps it
     touches — no extra shuffle.  At 10^10 URLs (thousands of larger
@@ -260,10 +264,14 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
            new_version: int) -> None:
     """OR the new URLs' bits into each touched shard.
 
-    Tasks are partitioned by the TRUE shard key (same blake2b-derived
-    shard as the probe) so exactly one task owns each shard file —
+    Rows are hash-partitioned by the TRUE shard key (same
+    blake2b-derived shard as the probe) into min(n_shards,
+    spark.sql.shuffle.partitions) tasks, so each task owns several
+    WHOLE shards and exactly one task writes each shard file —
     concurrent writers to one shard would lose bits (false negatives).
-    Untouched shards are found at older versions by ``load_shard``.
+    A task publishes each owned shard once, after folding in all of
+    its rows.  Untouched shards are not written; ``load_shard`` finds
+    them at older versions.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -297,6 +305,10 @@ def update(new_urls_df, bloom: BloomStore, prev_version: int,
             bloom.write_shard(new_version, shard, bm)
             yield pd.DataFrame({"shard": [shard], "n": [1]})
 
-    df.repartition(n_shards, "_shard").mapInPandas(
+    n_tasks = min(
+        n_shards,
+        int(new_urls_df.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+    )
+    df.repartition(n_tasks, "_shard").mapInPandas(
         gen, "shard int, n int"
     ).count()

@@ -42,7 +42,7 @@ joins + column expressions — no sequential scan anywhere.
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -172,42 +172,77 @@ class SparkCrawler:
 
     def run(self, seeds: list[str], max_waves: int | None = None) -> CrawlArtifacts:
         """Fresh crawl: ingest seeds, loop waves, commit per wave."""
-        frontier, seed_deduped = ops.ingest_seeds(self.spark, seeds)
-        return self._start(frontier, seed_deduped, max_waves)
+        return self._start(
+            ops.mark_seed_duplicates(ops.seed_frame(self.spark, seeds)),
+            max_waves,
+        )
 
     def run_frontier(
         self, seed_frame: DataFrame, max_waves: int | None = None
     ) -> CrawlArtifacts:
         """Fresh crawl from a (seed_rank, raw_url) DataFrame (bench path)."""
-        frontier, seed_deduped = ops.ingest_seed_frame(seed_frame)
-        return self._start(frontier, seed_deduped, max_waves)
+        return self._start(ops.mark_seed_duplicates(seed_frame), max_waves)
 
-    def _start(
-        self, frontier: DataFrame, seed_deduped: int, max_waves: int | None
-    ) -> CrawlArtifacts:
+    def _start(self, marked: DataFrame, max_waves: int | None) -> CrawlArtifacts:
+        """Wave -1: write the v0 state tables, commit, run the waves.
+
+        ``marked`` is ``ops.mark_seed_duplicates`` output.  ONE job
+        materializes it and counts kept and duplicate seeds, so the
+        seeds cross into Python once.  The frontier, seen and hosts v0
+        writes and the bloom v0 update then run concurrently from the
+        cached frame on critical-pool threads; the wave -1 manifest
+        commits only after all four are durable (SPEC-12).
+        """
         st = self.store
         st.cleanup()
-        st.write_version("frontier", 0, frontier)
-        seen0 = st.read_version("frontier", 0).select(
-            "url",
-            "host_hash",
-            F.lit(0).alias("first_wave"),
-            "depth",
-            "parent_rank",
-            "link_pos",
-        )
-        st.write_version("seen", 0, seen0)
-        st.write_version("hosts", 0, self.spark.createDataFrame([], HOSTS_SCHEMA))
         if self.use_bloom:
-            from spider_1_spark.engine import bloom as bloom_mod
-
             self.bloom.prune(-1)
-            bloom_mod.update(seen0.select("url"), self.bloom, -1, 0)
+        marked = marked.persist()
+        try:
+            counts = marked.agg(
+                F.count_if(~F.col("_dup")).alias("kept"),
+                F.count_if(F.col("_dup")).alias("dups"),
+            ).first()
+            frontier = marked.filter(~F.col("_dup")).drop("_dup")
+            seen0 = frontier.select(
+                "url",
+                "host_hash",
+                F.lit(0).alias("first_wave"),
+                "depth",
+                "parent_rank",
+                "link_pos",
+            )
+            branches = [
+                lambda: st.write_version("frontier", 0, frontier),
+                lambda: st.write_version("seen", 0, seen0),
+                lambda: st.write_version(
+                    "hosts", 0, self.spark.createDataFrame([], HOSTS_SCHEMA)
+                ),
+            ]
+            if self.use_bloom:
+                from spider_1_spark.engine import bloom as bloom_mod
+
+                branches.append(
+                    lambda: bloom_mod.update(
+                        frontier.select("url"), self.bloom, -1, 0
+                    )
+                )
+            with ThreadPoolExecutor(
+                max_workers=len(branches), thread_name_prefix="seed"
+            ) as pool:
+                futs = [
+                    pool.submit(self._branch(CRITICAL_POOL, fn))
+                    for fn in branches
+                ]
+                # every branch ends before a failure re-raises, so no
+                # writer outlives _start
+                wait(futs)
+            for f in futs:
+                f.result()
+        finally:
+            marked.unpersist()
         counters = {k: 0 for k in COUNTER_NAMES}
-        counters["deduped"] = seed_deduped
-        # empty seed frontier => zero waves, like the oracle's
-        # `while frontier:` never entering the loop
-        empty = st.read_version("frontier", 0).limit(1).count() == 0
+        counters["deduped"] = int(counts["dups"])
         manifest = {
             "wave_id": -1,
             "versions": {"frontier": 0, "seen": 0, "hosts": 0},
@@ -215,7 +250,9 @@ class SparkCrawler:
             "global_fetched": 0,
             "n_hosts": 0,
             "counters": counters,
-            "done": empty,
+            # empty seed frontier => zero waves, like the oracle's
+            # `while frontier:` never entering the loop
+            "done": counts["kept"] == 0,
         }
         st.commit(manifest)
         return self._loop(manifest, max_waves)
@@ -510,16 +547,6 @@ class SparkCrawler:
         fetchset = ranked.filter(F.col("g") < remaining).withColumn(
             "seq", F.col("g") + F.lit(src["seq_next"])
         )
-        # persist (NOT localCheckpoint): every downstream branch
-        # re-references this frame (anti-join, per-host agg, log write,
-        # fetch stage) so it must be cached, and persist() is the form
-        # the wave commit can actually RELEASE — a localCheckpoint's
-        # RDD blocks are not freed by DataFrame.unpersist() and linger
-        # until GC (ADVICE r1: cached-block growth on long crawls).
-        # Lineage depth is bounded per wave regardless: each wave
-        # starts from the committed parquet snapshots.  Lazy: the
-        # per-partition count right below is the single next action,
-        # so it doubles as the materializing job.
         # lazy localCheckpoint (not persist): every downstream branch
         # re-references this frame (anti-join, per-host agg, log write,
         # fetch stage), and the branches run from CONCURRENT driver
@@ -756,26 +783,56 @@ class SparkCrawler:
                 marked.filter(F.col("_seen").isNull()).drop("_seen")
             )
 
-            # beyond-max_depth anchors vanish silently BEFORE
-            # intra-wave dedup (oracle inserts nothing into seen for
-            # them — SPEC-7)
-            new_refs = new_refs.filter(
-                ~(
-                    (F.col("kind") == "a")
-                    & (F.col("parent_depth") + 1 > F.lit(pol.max_depth))
-                )
-            )
-            # A8 intra-wave dedup: first discovery by (seq, pos) wins.
+            # A8 intra-wave dedup, in the oracle's (seq, pos) order.
+            # An occurrence ADDS its url to seen unless it is an anchor
+            # beyond max_depth (SPEC-7: never enqueued, never seen).
+            # The first adding occurrence is the discovery; every later
+            # occurrence, beyond-depth anchors included, is deduped;
+            # beyond-depth anchors before it (or with no adding
+            # occurrence at all) vanish silently.  A wave mixes depth
+            # tiers when deferrals carry URLs into the next tier, so a
+            # beyond-depth anchor can follow a same-wave discovery.
             # Hash aggregate (min_by) instead of a sort window: partial
             # map-side combine collapses duplicate URLs before the
             # shuffle — the sort-based row_number variant shuffled
             # every ref.
-            grouped = new_refs.groupBy("url").agg(
-                F.min_by(
-                    F.struct("parent_depth", "seq", "pos", "kind", "caption"),
-                    F.struct("seq", "pos"),
-                ).alias("first"),
-                F.count("*").alias("n_occ"),
+            adds = ~(
+                (F.col("kind") == "a")
+                & (F.col("parent_depth") + 1 > F.lit(pol.max_depth))
+            )
+            at = F.struct("seq", "pos")
+            grouped = (
+                new_refs.groupBy("url")
+                .agg(
+                    # null orderings are skipped: the first ADDING one
+                    F.min_by(
+                        F.struct(
+                            "parent_depth", "seq", "pos", "kind", "caption"
+                        ),
+                        F.when(adds, at),
+                    ).alias("first"),
+                    F.count_if(adds).alias("n_add"),
+                    F.collect_list(F.when(~adds, at)).alias("beyond_at"),
+                )
+                .filter(F.col("first").isNotNull())
+                .select(
+                    "url",
+                    "first",
+                    (
+                        F.col("n_add")
+                        - 1
+                        + F.size(
+                            F.filter(
+                                "beyond_at",
+                                lambda b: b
+                                > F.struct(
+                                    F.col("first.seq").alias("seq"),
+                                    F.col("first.pos").alias("pos"),
+                                ),
+                            )
+                        )
+                    ).alias("n_dup"),
+                )
             )
             grouped = grouped.persist()
             pidc = F.spark_partition_id().alias("partition_id")
@@ -807,7 +864,7 @@ class SparkCrawler:
             for r in (
                 grouped.groupBy(pidc)
                 .agg(
-                    F.sum(F.col("n_occ") - 1).cast("long").alias("dups"),
+                    F.sum("n_dup").cast("long").alias("dups"),
                     F.sum(
                         F.when(F.col("first.kind") == "a", 1).otherwise(0)
                     ).cast("long").alias("anchors"),

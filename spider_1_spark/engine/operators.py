@@ -94,29 +94,30 @@ def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
 
 # ------------------------------------------------------------------ A1
 
-def ingest_seeds(spark: SparkSession, seeds: list[str]) -> tuple[DataFrame, int]:
-    """A1: ordered seed list → wave-0 frontier (SPEC-1/4).
-
-    Returns (frontier_df, deduped_count).  Seed index is explicit —
-    never ``monotonically_increasing_id`` (SURVEY §7 hard part 1).
-    First occurrence wins; duplicates count into ``deduped``.
-    """
-    raw = spark.createDataFrame(
+def seed_frame(spark: SparkSession, seeds: list[str]) -> DataFrame:
+    """An ordered seed list as a (seed_rank, raw_url) frame.  Seed
+    index is explicit — never ``monotonically_increasing_id`` (SURVEY
+    §7 hard part 1)."""
+    return spark.createDataFrame(
         [(i, s) for i, s in enumerate(seeds)], "seed_rank long, raw_url string"
     )
-    return ingest_seed_frame(raw)
 
 
-def ingest_seed_frame(raw: DataFrame) -> tuple[DataFrame, int]:
-    """Distributed seed ingestion from a (seed_rank, raw_url) frame."""
+def mark_seed_duplicates(raw: DataFrame) -> DataFrame:
+    """A1: (seed_rank, raw_url) frame → wave-0 frontier rows plus a
+    ``_dup`` flag (SPEC-1/4).
+
+    Unparseable seeds vanish; among seeds that canonicalize to the
+    same URL the first by seed_rank wins and the rest are flagged
+    ``_dup`` (they count into ``deduped``).  One plan serves both the
+    frontier and the duplicate count, so one job can materialize it.
+    """
     df = raw.withColumn("url", canonicalize_udf(F.col("raw_url"))).filter(
         F.col("url").isNotNull()
     )
     w = Window.partitionBy("url").orderBy("seed_rank")
-    df = df.withColumn("_rn", F.row_number().over(w))
-    deduped = df.filter(F.col("_rn") > 1).count()
-    df = df.filter(F.col("_rn") == 1).drop("_rn")
-    frontier = with_host(df).select(
+    df = df.withColumn("_dup", F.row_number().over(w) > 1)
+    return with_host(df).select(
         "url",
         "host",
         "host_hash",
@@ -125,8 +126,22 @@ def ingest_seed_frame(raw: DataFrame) -> tuple[DataFrame, int]:
         F.lit(0).alias("link_pos"),
         F.lit(0).alias("discovered_wave"),
         F.lit("PENDING").alias("state"),
+        "_dup",
     )
-    return frontier, int(deduped)
+
+
+def ingest_seeds(spark: SparkSession, seeds: list[str]) -> tuple[DataFrame, int]:
+    """A1: ordered seed list → (wave-0 frontier, deduped count)."""
+    return ingest_seed_frame(seed_frame(spark, seeds))
+
+
+def ingest_seed_frame(raw: DataFrame) -> tuple[DataFrame, int]:
+    """(seed_rank, raw_url) frame → (wave-0 frontier, deduped count).
+    Runs the duplicate count as its own job; the crawler instead
+    materializes ``mark_seed_duplicates`` once (SparkCrawler._start)."""
+    marked = mark_seed_duplicates(raw)
+    deduped = marked.filter(F.col("_dup")).count()
+    return marked.filter(~F.col("_dup")).drop("_dup"), int(deduped)
 
 
 # ------------------------------------------------------------------ A11

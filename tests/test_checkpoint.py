@@ -109,6 +109,54 @@ def test_crash_residue_rolled_back(spark, oracle):
         shutil.rmtree(root, ignore_errors=True)
 
 
+class SeenV0WriteFails:
+    """State store that raises inside ``write_version("seen", 0)`` —
+    a fault in one branch of the concurrent wave -1 seeding."""
+
+    def __init__(self, inner):
+        self.inner = inner
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+    def write_version(self, name, version, df):
+        if (name, version) == ("seen", 0):
+            raise OSError("injected seen v0 write failure")
+        self.inner.write_version(name, version, df)
+
+
+def test_seeding_branch_failure_drains_and_resumes(spark, oracle):
+    """A failing seeding branch surfaces at run()'s caller only after
+    the other seeding branches finished: no seeding thread is alive,
+    no manifest is committed, and a fresh run() on the same root
+    matches the oracle."""
+    import threading
+
+    from spider_1_spark.engine.state import ParquetSnapshotStore
+
+    web = SyntheticWeb(N_HOSTS)
+    seeds = make_seeds(N_SEEDS, N_HOSTS)
+    root = tempfile.mkdtemp(prefix="spider1_seedfail_")
+    try:
+        store = SeenV0WriteFails(ParquetSnapshotStore(spark, root))
+        with pytest.raises(OSError, match="injected seen v0"):
+            SparkCrawler(spark, POLICY, web, root, store=store).run(seeds)
+        assert not [
+            t.name for t in threading.enumerate() if t.name.startswith("seed")
+        ]
+        assert store.read_manifest() is None
+
+        art = SparkCrawler(spark, POLICY, web, root).run(seeds)
+        log, seen, images, counters, waves = collect(art)
+        assert log == [tuple(t) for t in oracle.crawl_log]
+        assert seen == oracle.seen
+        assert images == sorted(oracle.images)
+        assert counters == oracle.counters
+        assert waves == oracle.n_waves
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def test_manifest_commit_is_atomic_rename(spark):
     """The manifest file is always complete JSON (tmp+os.replace)."""
     root = tempfile.mkdtemp(prefix="spider1_manifest_")

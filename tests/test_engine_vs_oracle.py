@@ -34,34 +34,49 @@ CONFIGS = {
 }
 
 
-def run_both(spark, name, **crawler_kwargs):
-    n_hosts, n_seeds, policy = CONFIGS[name]
-    web = SyntheticWeb(n_hosts)
-    seeds = make_seeds(n_seeds, n_hosts)
+def collect(art):
+    """The comparable form of a run's CrawlArtifacts (see check_equal)."""
+    return (
+        sorted(
+            (r.seq, r.url, r.depth, r.parent_rank, r.link_pos, r.wave_id)
+            for r in art.crawl_log.collect()
+        ),
+        {
+            r.url: (r.first_wave, r.depth, r.parent_rank, r.link_pos)
+            for r in art.seen.collect()
+        },
+        sorted(
+            (r.image_id, bytes(r.bytes), r.w, r.h, r.fmt, r.caption, r.phash)
+            for r in art.images.collect()
+        ),
+        art.counters,
+        art.metrics.collect(),
+        art.n_waves,
+    )
+
+
+def run_seeds(spark, seeds, policy, web, prefix="spider1_", **crawler_kwargs):
+    """(oracle result, collected engine artifacts) for one seed crawl."""
     oracle = ref.crawl(seeds, policy, web)
-    root = tempfile.mkdtemp(prefix=f"spider1_{name}_")
+    root = tempfile.mkdtemp(prefix=prefix)
     try:
         art = SparkCrawler(spark, policy, web, root, **crawler_kwargs).run(seeds)
-        yield_art = (
-            sorted(
-                (r.seq, r.url, r.depth, r.parent_rank, r.link_pos, r.wave_id)
-                for r in art.crawl_log.collect()
-            ),
-            {
-                r.url: (r.first_wave, r.depth, r.parent_rank, r.link_pos)
-                for r in art.seen.collect()
-            },
-            sorted(
-                (r.image_id, bytes(r.bytes), r.w, r.h, r.fmt, r.caption, r.phash)
-                for r in art.images.collect()
-            ),
-            art.counters,
-            art.metrics.collect(),
-            art.n_waves,
-        )
+        got = collect(art)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return oracle, yield_art
+    return oracle, got
+
+
+def run_both(spark, name, **crawler_kwargs):
+    n_hosts, n_seeds, policy = CONFIGS[name]
+    return run_seeds(
+        spark,
+        make_seeds(n_seeds, n_hosts),
+        policy,
+        SyntheticWeb(n_hosts),
+        prefix=f"spider1_{name}_",
+        **crawler_kwargs,
+    )
 
 
 def check_equal(oracle, art):
@@ -184,25 +199,34 @@ def test_engine_matches_oracle_frontier_mode(spark, payload):
     root = tempfile.mkdtemp(prefix="spider1_frontier_")
     try:
         art = SparkCrawler(spark, policy, web, root).run_frontier(frame)
-        got = (
-            sorted(
-                (r.seq, r.url, r.depth, r.parent_rank, r.link_pos, r.wave_id)
-                for r in art.crawl_log.collect()
-            ),
-            {
-                r.url: (r.first_wave, r.depth, r.parent_rank, r.link_pos)
-                for r in art.seen.collect()
-            },
-            sorted(
-                (r.image_id, bytes(r.bytes), r.w, r.h, r.fmt, r.caption, r.phash)
-                for r in art.images.collect()
-            ),
-            art.counters,
-            art.metrics.collect(),
-            art.n_waves,
-        )
+        got = collect(art)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+    check_equal(oracle, got)
+
+
+def test_beyond_depth_anchor_after_same_wave_discovery_is_deduped(spark):
+    """A deferral carries seed /p/8 (depth 0) into wave 1, which also
+    fetches the depth-1 pages.  /p/8's anchors discover URLs at depth
+    1; the depth-1 pages that link to the same URLs later in the wave
+    are beyond max_depth=1, and the oracle counts those anchors as
+    deduped because it checks seen before the depth limit.  One host,
+    three seeds: the smallest synthetic web and policy in which a wave
+    mixes depth tiers this way."""
+    policy = Policy(
+        max_depth=1,
+        per_host_wave_budget=2,
+        per_host_total_cap=4,
+        global_page_budget=1000,
+    )
+    seeds = [f"http://h0.example.test/p/{p}" for p in (0, 4, 8)]
+    oracle, got = run_seeds(spark, seeds, policy, SyntheticWeb(1))
+    depths_by_wave: dict[int, set[int]] = {}
+    for _, _, depth, _, _, wave in oracle.crawl_log:
+        depths_by_wave.setdefault(wave, set()).add(depth)
+    assert any(len(d) > 1 for d in depths_by_wave.values()), (
+        "fixture must fetch two depth tiers in one wave"
+    )
     check_equal(oracle, got)
 
 

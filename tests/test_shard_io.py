@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from spider_1_spark.engine.bloom import (
@@ -150,3 +151,51 @@ def test_local_prune_removes_crash_residue(tmp_path):
     store.prune(0)
     assert np.array_equal(store.load_shard(3, 0), bm0)
     assert not os.path.exists(store.vdir(3))
+
+
+def test_update_with_fewer_tasks_than_shards(spark, tmp_path):
+    """32 shards under 4 shuffle partitions: each bloom.update task owns
+    several whole shards.  Every touched shard is published exactly
+    once per version, untouched shards are not written, and every
+    inserted URL probes positive after two successive updates."""
+    from collections import Counter
+
+    from spider_1_spark.engine import bloom
+    from spider_1_spark.engine.bloom import _hashes, probe_pandas
+
+    log = str(tmp_path / "writes.log")
+
+    class RecordingShardIO(LocalShardIO):
+        # runs inside Spark's Python workers: record to a shared file
+        def write_atomic(self, path: str, payload: bytes) -> None:
+            super().write_atomic(path, payload)
+            with open(log, "a") as f:
+                f.write(path + "\n")
+
+    store = BloomStore(
+        str(tmp_path), n_shards=32, m_bits=1 << 14, io=RecordingShardIO()
+    )
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < store.n_shards
+    batches = [
+        [f"http://h{i % 3}.test/p/{i}" for i in range(12)],
+        [f"http://h{i % 3}.test/p/{i}" for i in range(12, 17)],
+    ]
+    for version, urls in enumerate(batches):
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        bloom.update(df.repartition(3), store, version - 1, version)
+
+    with open(log) as f:
+        writes = Counter(f.read().split())
+    expected = {
+        store.shard_path(version, shard): 1
+        for version, urls in enumerate(batches)
+        for shard in (_hashes(urls)[0] % np.uint64(store.n_shards)).tolist()
+    }
+    assert writes == expected
+    # each version touches only some shards; the rest stay unwritten
+    for version in range(len(batches)):
+        vdir = store.vdir(version) + os.sep
+        assert 0 < sum(p.startswith(vdir) for p in writes) < store.n_shards
+
+    urls = pd.Series(batches[0] + batches[1])
+    assert probe_pandas(urls, store, 1, {}).all()
