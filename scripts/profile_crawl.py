@@ -1,9 +1,10 @@
 """Event-log profiler for the crawl bench — per-stage scaling attribution.
 
 Runs the same crawl as bench.py (same knobs) with Spark event logging
-enabled, then parses the event log into a per-stage table: executor
-run time (cpu-parallel work), task count, and the *serial* span each
-stage contributed to the wall clock.  Comparing two runs at different
+enabled, then parses the event log into a per-stage table: the
+*serial* span each stage contributed to the wall clock, executor run,
+cpu and gc time, shuffle and spill volume, task count, and the engine
+layer (job description ``w{wave}/{node}``) that ran it.  Comparing two runs at different
 `SPARK_GRAFT_CPUS` shows exactly which stages scale with cores and
 which are fixed cost — the input the BASELINE.md §3 efficiency
 analysis needs.
@@ -69,7 +70,8 @@ def run(evt_dir: str) -> None:
         spark.stop()
 
 
-def parse(evt_dir: str, top: int = 40) -> None:
+def _open_event_log(evt_dir: str):
+    """Text stream of the newest event log in ``evt_dir``."""
     files = [os.path.join(evt_dir, f) for f in os.listdir(evt_dir)
              if not f.startswith(".")]
     path = max(files, key=os.path.getmtime)
@@ -79,62 +81,77 @@ def parse(evt_dir: str, top: int = 40) -> None:
              if "appstatus" not in f),
             key=os.path.getmtime,
         )
-    stages = {}           # sid -> dict
-    stage_tasks = defaultdict(lambda: [0, 0.0, 0.0, 0.0])
-    # sid -> [n_tasks, sum_run_ms, sum_deser+ser, sum_py]
     if path.endswith(".zstd"):
         import io
 
         import pyarrow as pa
 
-        text = io.TextIOWrapper(
+        return path, io.TextIOWrapper(
             pa.input_stream(path, compression="zstd"), encoding="utf-8"
         )
-    else:
-        text = open(path)
-    for line in text:
-        try:
-            e = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        ev = e.get("Event")
-        if ev == "SparkListenerStageCompleted":
-            si = e["Stage Info"]
-            sid = si["Stage ID"]
-            sub = si.get("Submission Time")
-            comp = si.get("Completion Time")
-            stages[sid] = {
-                "name": si["Stage Name"],
-                "details": (si.get("Details") or "").split("\n")[0][:120],
-                "wall_ms": (comp - sub) if sub and comp else 0,
-                "sub": sub or 0,
-                "n_part": si.get("Number of Tasks"),
-            }
-        elif ev == "SparkListenerTaskEnd":
-            sid = e["Stage ID"]
-            tm = e.get("Task Metrics") or {}
-            rec = stage_tasks[sid]
-            rec[0] += 1
-            rec[1] += tm.get("Executor Run Time", 0)
-            rec[2] += (tm.get("Executor Deserialize Time", 0)
-                       + tm.get("Result Serialization Time", 0))
-            sch = e.get("Task Info", {})
-            rec[3] += max(0, sch.get("Launch Time", 0) and 0)
-    rows = []
-    for sid, s in stages.items():
-        n, run_ms, overhead, _ = stage_tasks.get(sid, [0, 0, 0, 0])
-        rows.append((s["wall_ms"], run_ms, n, sid, s["name"], s["sub"]))
-    rows.sort(key=lambda r: -r[0])
-    t0 = min((r[5] for r in rows if r[5]), default=0)
-    total_wall = sum(r[0] for r in rows)
-    total_run = sum(r[1] for r in rows)
-    print(f"{'wall_s':>7} {'cpu_s':>8} {'tasks':>6} {'sid':>5} "
-          f"{'t+':>7}  stage")
-    for wall, run_ms, n, sid, name, sub in rows[:top]:
-        print(f"{wall/1e3:7.2f} {run_ms/1e3:8.2f} {n:6d} {sid:5d} "
-              f"{(sub-t0)/1e3:7.1f}  {name[:70]}")
-    print(f"\nTOTAL stage-wall {total_wall/1e3:.1f}s  "
-          f"task-cpu {total_run/1e3:.1f}s  file={os.path.basename(path)}")
+    return path, open(path)
+
+
+def parse(evt_dir: str, top: int = 40) -> None:
+    """Per-stage table: wall span, task run/cpu/gc time, shuffle and
+    spill volume, and the engine layer that ran the stage — the
+    ``w{wave}/{node}`` (or ``seed/{node}``) description of its job."""
+    path, text = _open_event_log(evt_dir)
+    stages = {}  # sid -> (name, wall_ms, submit_ms)
+    layer = {}  # sid -> description of the first job that ran it
+    agg = defaultdict(lambda: defaultdict(float))
+    with text:
+        for line in text:
+            try:
+                e = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            ev = e.get("Event")
+            if ev == "SparkListenerJobStart":
+                props = e.get("Properties") or {}
+                desc = props.get("spark.job.description") or "-"
+                for sid in e.get("Stage IDs", []):
+                    layer.setdefault(sid, desc)
+            elif ev == "SparkListenerStageCompleted":
+                si = e["Stage Info"]
+                sub = si.get("Submission Time") or 0
+                comp = si.get("Completion Time") or 0
+                stages[si["Stage ID"]] = (
+                    si["Stage Name"], comp - sub if sub and comp else 0, sub,
+                )
+            elif ev == "SparkListenerTaskEnd":
+                tm = e.get("Task Metrics") or {}
+                srm = tm.get("Shuffle Read Metrics") or {}
+                swm = tm.get("Shuffle Write Metrics") or {}
+                a = agg[e["Stage ID"]]
+                a["n"] += 1
+                a["run_s"] += tm.get("Executor Run Time", 0) / 1e3
+                a["cpu_s"] += tm.get("Executor CPU Time", 0) / 1e9
+                a["gc_s"] += tm.get("JVM GC Time", 0) / 1e3
+                a["shr_mb"] += (srm.get("Remote Bytes Read", 0)
+                                + srm.get("Local Bytes Read", 0)) / 2**20
+                a["shw_mb"] += swm.get("Shuffle Bytes Written", 0) / 2**20
+                a["spill_mb"] += (tm.get("Memory Bytes Spilled", 0)
+                                  + tm.get("Disk Bytes Spilled", 0)) / 2**20
+    cols = ("run_s", "cpu_s", "gc_s", "shr_mb", "shw_mb", "spill_mb")
+    rows = sorted(stages.items(), key=lambda kv: -kv[1][1])
+    t0 = min((sub for _, _, sub in stages.values() if sub), default=0)
+    print(f"{'wall_s':>7} {'run_s':>7} {'cpu_s':>7} {'gc_s':>6} "
+          f"{'shR_MB':>7} {'shW_MB':>7} {'spill':>6} {'tasks':>6} "
+          f"{'sid':>5} {'t+':>7}  {'layer':<16} stage")
+    for sid, (name, wall_ms, sub) in rows[:top]:
+        a = agg[sid]
+        print(f"{wall_ms/1e3:7.2f} {a['run_s']:7.2f} {a['cpu_s']:7.2f} "
+              f"{a['gc_s']:6.2f} {a['shr_mb']:7.1f} {a['shw_mb']:7.1f} "
+              f"{a['spill_mb']:6.1f} {int(a['n']):6d} {sid:5d} "
+              f"{(sub - t0)/1e3:7.1f}  {layer.get(sid, '-'):<16} "
+              f"{name[:60]}")
+    tot = {c: sum(a[c] for a in agg.values()) for c in cols}
+    wall = sum(w for _, w, _ in stages.values()) / 1e3
+    print(f"\nTOTAL stage-wall {wall:.1f}s  task-run {tot['run_s']:.1f}s  "
+          f"cpu {tot['cpu_s']:.1f}s  gc {tot['gc_s']:.1f}s  "
+          f"shuffle-write {tot['shw_mb']:.0f}MB  spill {tot['spill_mb']:.0f}MB  "
+          f"file={os.path.basename(path)}")
 
 
 if __name__ == "__main__":

@@ -18,9 +18,7 @@ maintained as … state tables at 10^10-URL scale".  Design:
     bitmap)), so every shard file still has exactly one writer;
   * the probe is fused into the fetch/extract Arrow stage
     (``probe_pandas``): each worker lazily caches the shard bitmaps it
-    touches — no extra shuffle.  At 10^10 URLs (thousands of larger
-    shards on shared storage) the standalone shard-aligned ``probe``
-    stage bounds per-task I/O instead;
+    touches — no extra shuffle;
   * ZERO false negatives by construction (bits only set for real
     URLs — property-tested in tests/test_properties.py); false
     positives are resolved by the exact join on the (small)
@@ -224,40 +222,6 @@ def probe_pandas(
             h &= (bm[byte] >> bit) & 1 == 1
         hit[sel] = h
     return hit
-
-
-def probe(df, bloom: BloomStore, version: int, url_col: str = "url"):
-    """Standalone shard-ALIGNED probe stage (the 10^10-scale variant):
-    repartitions by shard so each task loads few sidecars."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    n_shards = bloom.n_shards
-
-    @F.pandas_udf(T.IntegerType())
-    def shard_udf(urls: pd.Series) -> pd.Series:
-        h1, _ = _hashes(urls)
-        return pd.Series((h1 % np.uint64(n_shards)).astype(np.int32))
-
-    df = df.withColumn("_shard", shard_udf(F.col(url_col)))
-    out_schema = df.schema.add("maybe_seen", "boolean")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pdf = pdf.copy()
-            pdf["maybe_seen"] = probe_pandas(
-                pdf[url_col], bloom, version, cache
-            )
-            yield pdf
-
-    return (
-        df.repartition(n_shards, "_shard")
-        .mapInPandas(gen, out_schema)
-        .drop("_shard")
-    )
 
 
 def update(new_urls_df, bloom: BloomStore, prev_version: int,

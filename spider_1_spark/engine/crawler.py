@@ -41,14 +41,15 @@ joins + column expressions — no sequential scan anywhere.
 
 from __future__ import annotations
 
+import contextlib
 import os
-from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spider_1_spark.engine import operators as ops
+from spider_1_spark.engine.dag import WaveDag
 from spider_1_spark.engine.state import HOSTS_SCHEMA, METRICS_SCHEMA
 from spider_1_spark.reference_model.spider1_ref import COUNTER_NAMES, Policy
 
@@ -66,6 +67,12 @@ FAIR_SCHEDULER_XML = os.path.join(
 CRITICAL_POOL = "critical"  # jobs the wave (or next wave) blocks on
 HARVEST_POOL = "harvest"  # overlapped fetch/decode stages (see below)
 LAGGING_POOL = "lagging"  # sink writes joined only at commit
+
+# The hosts side of the frontier⋈hosts join is broadcast while the
+# driver-tracked host count stays at or below this, and shuffle-joined
+# past it (the 10^8-host design point).  Patchable so tests can force
+# the shuffle join on small fixtures.
+HOSTS_BROADCAST_MAX = 4_000_000
 
 
 def _release_cached(df: DataFrame) -> None:
@@ -114,10 +121,8 @@ class SparkCrawler:
         use_bloom: bool = True,
         bloom_shards: int = 32,
         bloom_bits: int = 1 << 22,
-        aligned_probe: bool = False,
         store=None,
         bloom_root: str | None = None,
-        hosts_broadcast_max: int = 4_000_000,
         bloom_io=None,
     ):
         self.spark = spark
@@ -139,19 +144,6 @@ class SparkCrawler:
         self.n_salts = n_salts
         self.rank_partitions = rank_partitions
         self.use_bloom = use_bloom
-        # aligned_probe: probe bloom shards in a standalone
-        # shard-ALIGNED stage (bloom.probe) instead of fusing the probe
-        # into the fetch/extract Arrow stage.  The fused probe is
-        # faster here (no extra shuffle; every worker lazily caches the
-        # shards it touches), but at the 10^10-URL design point —
-        # thousands of multi-GB shards on shared storage — the aligned
-        # stage bounds per-task sidecar I/O to ~1 shard instead of
-        # worst-case all of them; flip this flag on a real cluster when
-        # shard count × shard size outgrows executor page cache.
-        self.aligned_probe = aligned_probe
-        # hosts side of the frontier⋈hosts join is broadcast below this
-        # driver-tracked host count, partitioned-shuffle joined above it
-        self.hosts_broadcast_max = hosts_broadcast_max
         from spider_1_spark.engine.bloom import BloomStore
 
         # bloom_io: a bloom.ShardIO for non-local shard storage (the
@@ -161,12 +153,6 @@ class SparkCrawler:
         self.bloom = BloomStore(
             bloom_root or root, bloom_shards, bloom_bits, io=bloom_io
         )
-        # profiler state must exist before any thread can race the
-        # lazy getattr in _prof (two first-marker threads would each
-        # build a threading.local and one side's deltas would reset)
-        import threading
-
-        self._prof_tl = threading.local()
 
     # ------------------------------------------------------------ run
 
@@ -184,21 +170,29 @@ class SparkCrawler:
         return self._start(ops.mark_seed_duplicates(seed_frame), max_waves)
 
     def _start(self, marked: DataFrame, max_waves: int | None) -> CrawlArtifacts:
-        """Wave -1: write the v0 state tables, commit, run the waves.
+        """Seed (wave -1) from ``marked``, then run the waves."""
+        st = self.store
+        st.cleanup()
+        if self.use_bloom:
+            self.bloom.prune(-1)
+        with self._loop_thread():
+            return self._loop(self._seed(marked), max_waves)
+
+    def _seed(self, marked: DataFrame) -> dict:
+        """Wave -1: write the v0 state tables and commit them.
 
         ``marked`` is ``ops.mark_seed_duplicates`` output.  ONE job
         materializes it and counts kept and duplicate seeds, so the
         seeds cross into Python once.  The frontier, seen and hosts v0
         writes and the bloom v0 update then run concurrently from the
-        cached frame on critical-pool threads; the wave -1 manifest
+        cached frame as critical-pool nodes; the wave -1 manifest
         commits only after all four are durable (SPEC-12).
         """
         st = self.store
-        st.cleanup()
-        if self.use_bloom:
-            self.bloom.prune(-1)
+        dag = WaveDag(self.spark.sparkContext, "seed")
         marked = marked.persist()
         try:
+            dag.describe("mark")
             counts = marked.agg(
                 F.count_if(~F.col("_dup")).alias("kept"),
                 F.count_if(F.col("_dup")).alias("dups"),
@@ -212,35 +206,27 @@ class SparkCrawler:
                 "parent_rank",
                 "link_pos",
             )
-            branches = [
-                lambda: st.write_version("frontier", 0, frontier),
-                lambda: st.write_version("seen", 0, seen0),
-                lambda: st.write_version(
+            nodes = {
+                "frontier": lambda: st.write_version("frontier", 0, frontier),
+                "seen": lambda: st.write_version("seen", 0, seen0),
+                "hosts": lambda: st.write_version(
                     "hosts", 0, self.spark.createDataFrame([], HOSTS_SCHEMA)
                 ),
-            ]
+            }
             if self.use_bloom:
                 from spider_1_spark.engine import bloom as bloom_mod
 
-                branches.append(
-                    lambda: bloom_mod.update(
-                        frontier.select("url"), self.bloom, -1, 0
-                    )
+                nodes["bloom"] = lambda: bloom_mod.update(
+                    frontier.select("url"), self.bloom, -1, 0
                 )
-            with ThreadPoolExecutor(
-                max_workers=len(branches), thread_name_prefix="seed"
-            ) as pool:
-                futs = [
-                    pool.submit(self._branch(CRITICAL_POOL, fn))
-                    for fn in branches
-                ]
-                # every branch ends before a failure re-raises, so no
-                # writer outlives _start
-                wait(futs)
-            for f in futs:
-                f.result()
+            for name, fn in nodes.items():
+                dag.add(name, CRITICAL_POOL, fn)
         finally:
+            # every node ends before a failure re-raises, so no writer
+            # outlives the seeding
+            dag.join()
             marked.unpersist()
+        dag.drain()
         counters = {k: 0 for k in COUNTER_NAMES}
         counters["deduped"] = int(counts["dups"])
         manifest = {
@@ -255,7 +241,7 @@ class SparkCrawler:
             "done": counts["kept"] == 0,
         }
         st.commit(manifest)
-        return self._loop(manifest, max_waves)
+        return manifest
 
     def resume(self, max_waves: int | None = None) -> CrawlArtifacts:
         """EP2: continue from the last committed manifest (SPEC-12)."""
@@ -266,9 +252,26 @@ class SparkCrawler:
         st.cleanup()
         if self.use_bloom:
             self.bloom.prune(manifest["versions"]["seen"])
-        return self._loop(manifest, max_waves)
+        with self._loop_thread():
+            return self._loop(manifest, max_waves)
 
     # ----------------------------------------------------------- loop
+
+    @contextlib.contextmanager
+    def _loop_thread(self):
+        """Run the caller's thread as the loop thread: its jobs (every
+        critical-path job not in a node) go to the critical pool.  On
+        exit the caller's pool and job description are restored, so
+        the caller's later jobs do not run in the critical pool."""
+        sc = self.spark.sparkContext
+        keys = ("spark.scheduler.pool", "spark.job.description")
+        saved = [sc.getLocalProperty(k) for k in keys]
+        sc.setLocalProperty("spark.scheduler.pool", CRITICAL_POOL)
+        try:
+            yield
+        finally:
+            for k, v in zip(keys, saved):
+                sc.setLocalProperty(k, v)
 
     def _loop(self, manifest: dict, max_waves: int | None) -> CrawlArtifacts:
         """Pipelined wave loop.
@@ -276,20 +279,18 @@ class SparkCrawler:
         Wave w+1's CRITICAL path (schedule → fetch → dedup → seen /
         frontier / hosts snapshots — everything the next wave reads)
         starts as soon as wave w's critical path ends; wave w's LAGGING
-        branches (images sink append, crawl-log write, metrics, and the
-        manifest rename) drain concurrently and commit while w+1
-        computes.  Manifest commits stay strictly sequential, so the
-        crash contract is unchanged: anything newer than the committed
-        manifest is pruned on resume and the wave replays idempotently
-        (SPEC-12; tests/test_checkpoint.py).
+        nodes (images sink append, crawl-log and frontier writes, bloom
+        update) drain concurrently, and wave w commits (metrics and the
+        manifest rename) while w+1 computes.  Manifest commits stay
+        strictly sequential, so the crash contract is unchanged:
+        anything newer than the committed manifest is pruned on resume
+        and the wave replays idempotently (SPEC-12;
+        tests/test_checkpoint.py).
         """
         waves_run = 0
         pending: dict | None = None
         latest = manifest  # last COMMITTED manifest
-        # the loop thread drives every critical-path job
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", CRITICAL_POOL
-        )
+        dag: WaveDag | None = None  # the wave whose critical path runs
         try:
             while not (
                 pending["done"] if pending is not None else latest["done"]
@@ -297,7 +298,10 @@ class SparkCrawler:
                 if max_waves is not None and waves_run >= max_waves:
                     break
                 src = pending if pending is not None else latest
-                new_pending = self._wave_critical(src)
+                dag = WaveDag(
+                    self.spark.sparkContext, f"w{src['wave_id'] + 1}"
+                )
+                new_pending = self._wave_critical(src, dag)
                 waves_run += 1
                 if pending is not None:
                     latest = self._wave_commit(pending, latest)
@@ -305,22 +309,17 @@ class SparkCrawler:
             if pending is not None:
                 latest = self._wave_commit(pending, latest)
                 # no next wave will consume the final handoff frame
-                if pending.get("_frontier_df") is not None:
-                    _release_cached(pending["_frontier_df"])
+                _release_cached(pending["_frontier_df"])
                 pending = None
         except BaseException:
-            # a failed wave must not abandon in-flight branch threads:
-            # drain both the previous wave's lagging pool and the
-            # failing wave's own pool so no thread is still writing
-            # files while the exception unwinds (a caller that catches
-            # and resume()s would otherwise race those writers against
-            # cleanup()'s pruning — ADVICE r1)
-            pools = [pending["_pool"]] if pending is not None else []
-            active = getattr(self, "_active_pool", None)
-            if active is not None and all(active is not p for p in pools):
-                pools.append(active)
-            for p in pools:
-                p.shutdown(wait=True)
+            # a failed wave must not abandon node threads: join the
+            # pending wave's DAG and the current wave's DAG so no thread
+            # is still writing files while the exception unwinds (a
+            # caller that catches and resume()s would otherwise race
+            # those writers against cleanup()'s pruning)
+            for d in (pending and pending["_dag"], dag):
+                if d is not None:
+                    d.join()
             raise
         return self.artifacts(latest)
 
@@ -340,76 +339,14 @@ class SparkCrawler:
 
     # ----------------------------------------------------------- wave
 
-    def _prof(self, label: str) -> None:
-        """SPIDER1_PROFILE=1: per-stage wall-clock for wave tuning.
-
-        The previous-marker timestamp is THREAD-LOCAL: under wave
-        pipelining the loop thread and the pooled harvest thread both
-        emit markers, and a shared timestamp would interleave their
-        deltas into nonsense exactly in the pipelined regime the
-        profile exists to tune (ADVICE r2).  Each line is tagged with
-        the emitting thread so the two streams separate cleanly."""
-        import os
-        import threading
-        import time
-
-        if os.environ.get("SPIDER1_PROFILE"):
-            now = time.time()
-            tl = self._prof_tl  # built eagerly in __init__ (race-free)
-            prev = getattr(tl, "t", now)
-            tname = threading.current_thread().name
-            print(
-                f"[wave-prof] [{tname}] {label}: +{now - prev:.2f}s "
-                f"@{now % 10000:.1f}",
-                flush=True,
-            )
-            tl.t = now
-
-    def _branch(self, pool_name: str, fn):
-        """Tag a branch thread's Spark jobs with a scheduler pool.
-
-        Pool local-properties are per-thread and executor threads are
-        reused across branches with different pools, so each branch
-        must (re)set its own at entry — thread-creation inheritance
-        cannot be relied on.
-        """
-        sc = self.spark.sparkContext
-
-        def wrapped(*a, **kw):
-            sc.setLocalProperty("spark.scheduler.pool", pool_name)
-            return fn(*a, **kw)
-
-        wrapped.__name__ = getattr(fn, "__name__", "branch")
-        return wrapped
-
-    @staticmethod
-    def _timed(fn):
-        """Wrap a branch callable with wall-clock reporting (profiling)."""
-        import os
-        import time
-
-        if not os.environ.get("SPIDER1_PROFILE"):
-            return fn
-
-        def wrapped(*a, **kw):
-            t0 = time.time()
-            try:
-                return fn(*a, **kw)
-            finally:
-                print(
-                    f"[branch-prof] {fn.__name__}: {time.time() - t0:.2f}s",
-                    flush=True,
-                )
-
-        return wrapped
-
-    def _wave_critical(self, src: dict) -> dict:
+    def _wave_critical(self, src: dict, dag: WaveDag) -> dict:
         """Run wave ``src["wave_id"]+1`` up to (and including) the state
-        snapshots the NEXT wave reads; return a ``pending`` dict with
-        the lagging futures for _wave_commit.  ``src`` is either the
-        last committed manifest or the previous wave's pending dict —
-        only its versions / seq_next / global_fetched / wave_id are
-        read (counters are resolved at commit time)."""
+        snapshots the NEXT wave reads, declaring its nodes on ``dag``;
+        return a ``pending`` dict for _wave_commit.  ``src`` is either
+        the last committed manifest or the previous wave's pending dict
+        — only its versions / seq_next / global_fetched / wave_id (and
+        a pending dict's handoff frame and DAG) are read; counters are
+        resolved at commit time."""
         spark, st, pol = self.spark, self.store, self.policy
         wave = src["wave_id"] + 1
         v = src["versions"]
@@ -417,9 +354,8 @@ class SparkCrawler:
         cdelta = {k: 0 for k in COUNTER_NAMES}
         metrics: list[tuple] = []  # (stage, pid, counter_name, n)
 
-        self._prof(f"w{wave} start")
         # In-memory handoff from the previous wave when available: the
-        # frontier PARQUET write is a lagging branch (joined at that
+        # frontier PARQUET write is a lagging node (joined at that
         # wave's commit), so reading it back here would stall on it.
         # The handoff plan recomputes from frames the previous wave
         # keeps cached until its commit — which happens only after
@@ -435,7 +371,7 @@ class SparkCrawler:
         if frontier is None:
             frontier = st.read_version("frontier", v["frontier"])
         hosts = st.read_version("hosts", v["hosts"])
-        # NOTE: the seen delta-union plan is built inside harvest_run
+        # NOTE: the seen delta-union plan is built inside harvest_node
         # below, AFTER the previous wave's seen write is durable —
         # read_delta_union skips not-yet-written version dirs at plan
         # time, so building it here under harvest pipelining would
@@ -443,21 +379,15 @@ class SparkCrawler:
 
         # --- A11/SPEC-6: hosts enrichment + robots for new hosts -----
         # ONE left join against the hosts table yields both the
-        # rules/t0 enrichment AND new-host detection (unmatched rows).
-        # The r1 shape (frontier-wide distinct → anti-join → robots →
-        # union → semi-join → broadcast, every wave) paid its full cost
-        # even when a wave brought no new hosts — the steady state of a
-        # long crawl; now the distinct shuffles only unmatched rows
-        # (wave 0: all, later: ~none) and the robots/union chain
-        # short-circuits entirely when there are none.  The hosts side
-        # is broadcast while the driver-tracked host count stays under
-        # hosts_broadcast_max; past that (10^8-host design point) it
-        # falls back to a partitioned shuffle join automatically —
-        # VERDICT r1 flagged the unconditional broadcast as the first
-        # thing to die at scale.
+        # rules/t0 enrichment AND new-host detection (unmatched rows),
+        # so the distinct shuffles only unmatched rows (wave 0: all,
+        # later: ~none) and the robots/union chain costs ~nothing in
+        # the steady state of a long crawl, when a wave brings no new
+        # hosts.  The hosts side is broadcast up to HOSTS_BROADCAST_MAX
+        # driver-tracked hosts and shuffle-joined past it.
         n_hosts_known = src.get("n_hosts")
         hosts_sel = hosts.select("host", "rules_json", "fetch_total")
-        if n_hosts_known is None or n_hosts_known <= self.hosts_broadcast_max:
+        if n_hosts_known is None or n_hosts_known <= HOSTS_BROADCAST_MAX:
             hosts_sel = F.broadcast(hosts_sel)
         fr = frontier.join(hosts_sel, "host", "left")
         new_hosts = (
@@ -465,7 +395,7 @@ class SparkCrawler:
             .select("host", "host_hash")
             .distinct()
         )
-        # persisted so the hosts snapshot branch reuses the SAME robots
+        # persisted so the hosts snapshot node reuses the SAME robots
         # fetch (no re-fetch on side paths); materialized lazily by the
         # broadcast exchange below — NO driver-blocking count job sits
         # in the critical path (an explicit count here measured -20%
@@ -494,7 +424,6 @@ class SparkCrawler:
             .drop("_rj", "_ft")
         )
         hosts_all = hosts.unionByName(new_host_rows)
-        self._prof("hosts-join")
 
         # --- robots gate + t0 ----------------------------------------
         # allow-all hosts (rules_json "[]") short-circuit JVM-side; the
@@ -512,20 +441,20 @@ class SparkCrawler:
         fr = fr.persist()
         # Materialize `fr` NOW, with the robots-blocked partition count
         # the wave needs anyway (A20) — ONE linear job, before any
-        # other consumer exists.  The r1 shape computed this count on a
-        # lagging branch concurrent with the rank chain's first jobs,
-        # so 2-3 stages raced the COLD `fr` cache: at local[16] that
-        # measured 15-24x per-record JVM-CPU inflation (codegen-lock
-        # convoy + duplicate partition compute + unroll churn,
-        # BENCH/BASELINE.md §3d) and was invisible at local[4] — the
-        # single biggest contributor to the 4-vs-16 efficiency gap.
-        # Every downstream job (candidate ranking, gate, robots
-        # metrics) now reads `fr` warm.
+        # other consumer exists.  Computing this count concurrently
+        # with the rank chain's first jobs made 2-3 stages race the
+        # COLD `fr` cache: at local[16] that measured 15-24x per-record
+        # JVM-CPU inflation (codegen-lock convoy + duplicate partition
+        # compute + unroll churn, BENCH/BASELINE.md §3d) and was
+        # invisible at local[4].  Every downstream job (candidate
+        # ranking, gate) reads `fr` warm.
+        dag.describe("robots")
         robots_rows = [
             ("robots", pid, "robots_blocked", n)
             for pid, n in self._pcount_rows(fr.filter(~F.col("allowed")))
         ]
-        self._prof("fr-materialize")
+        metrics.extend(robots_rows)
+        cdelta["robots_blocked"] += sum(r[3] for r in robots_rows)
 
         # Columns dead past the robots gate are dropped BEFORE the rank
         # chain: rules_json (robots JSON strings — the widest column),
@@ -538,6 +467,7 @@ class SparkCrawler:
         )
 
         # --- A5+A9+A10: candidates, global rank, G cutoff ------------
+        dag.describe("rank")
         cand = ops.candidate_set(
             allowed, pol, self.n_salts, num_partitions=self.rank_partitions
         )
@@ -547,17 +477,16 @@ class SparkCrawler:
         fetchset = ranked.filter(F.col("g") < remaining).withColumn(
             "seq", F.col("g") + F.lit(src["seq_next"])
         )
-        # lazy localCheckpoint (not persist): every downstream branch
+        # lazy localCheckpoint (not persist): every downstream node
         # re-references this frame (anti-join, per-host agg, log write,
-        # fetch stage), and the branches run from CONCURRENT driver
-        # threads — a checkpointed LogicalRDD hands each of them
-        # precomputed partitions, while persist() was measured 2.4x
-        # slower wall-clock on the 2×10^5 bench (r2 bisect: 180s vs
-        # 54s).  Its RDD blocks are NOT freed by DataFrame.unpersist();
-        # _release_cached reaches into the LogicalRDD at wave commit
-        # (ADVICE r1: cached-block growth on long crawls).  Lazy: the
-        # per-partition count right below is the single next action,
-        # so it doubles as the materializing job.
+        # fetch stage) from CONCURRENT driver threads — a checkpointed
+        # LogicalRDD hands each of them precomputed partitions, while
+        # persist() was measured 2.4x slower wall-clock on the 2×10^5
+        # bench (180 s vs 54 s).  Its RDD blocks are NOT freed by
+        # DataFrame.unpersist(); _release_cached reaches into the
+        # LogicalRDD at wave commit.  Lazy: the per-partition count
+        # right below is the single next action, so it doubles as the
+        # materializing job.
         fetchset = fetchset.localCheckpoint(eager=False)
         # ONE materializing job: per-partition fetched counts (A20)
         # plus the fetchset's min depth — the depth decides whether
@@ -591,40 +520,23 @@ class SparkCrawler:
             )
         else:
             kstar = None
-        self._prof("schedule+rank")
 
-        # --- concurrent wave DAG -------------------------------------
-        # The rest of the wave is a DAG of Spark jobs whose edges are
-        # the persisted frames; independent branches run from driver
-        # threads (a SparkSession is thread-safe for job submission)
-        # so the JVM-side write/count jobs — low CPU, latency-bound —
-        # overlap the Arrow/Python stages that saturate the cores.
-        # Each persisted frame is materialized by exactly ONE job
-        # before concurrent consumers fork, so nothing computes twice.
-        # Completion order never affects results: the manifest rename
-        # at the end is still the single sequential commit (SPEC-12).
-        # one worker per branch (≤10 live submissions/wave: fh, robots,
-        # log, gate, hosts, frontier, harvest + the harvest's images/
-        # seen/bloom).  bloom_after_seen BLOCKS on fut_seen while
-        # holding a worker, and the harvest thread holds one while
-        # submitting three more, so the pool must stay comfortably
-        # above the live count or a queued dependency deadlocks it
-        pool = ThreadPoolExecutor(max_workers=12)
-        self._active_pool = pool  # drained by _loop on mid-wave failure
+        # --- the wave's DAG -------------------------------------------
+        # The rest of the wave is a DAG of nodes whose edges are the
+        # persisted frames.  Each persisted frame is materialized by
+        # exactly ONE job before concurrent consumers fork, so nothing
+        # computes twice.  Completion order never affects results: the
+        # manifest rename in _wave_commit is still the single
+        # sequential commit (SPEC-12).
 
-        def robots_branch() -> list[tuple]:
-            # computed up front as fr's materializing job (see above)
-            return robots_rows
-
-        def log_branch() -> None:
+        def log_node() -> None:
             # fetchset is already range-partitioned + sorted by KEY and
             # seq = g + const is monotone across those partitions, so
             # the output files are seq-contiguous as-is; every reader
             # orders by the seq COLUMN.  A repartitionByRange(seq) here
-            # re-shuffled the whole fetchset (plus a range-sampling
-            # job) per wave for nothing — removed (r2 profile: the log
-            # branch was a full-shuffle job competing with the fetch
-            # stage for cores).
+            # would re-shuffle the whole fetchset (plus a range-sampling
+            # job) per wave for nothing: a full-shuffle job competing
+            # with the fetch stage for cores.
             st.write_wave(
                 "crawl_log",
                 wave,
@@ -639,22 +551,16 @@ class SparkCrawler:
             )
 
         # per-host fetched counts — ONE shuffle of fetchset, shared by
-        # the gate and hosts branches (each previously re-aggregated it:
-        # two identical fetchset shuffles per wave).  Tiny result
-        # (≤ #hosts rows), materialized by a pool job both consumers
-        # join on.
+        # the gate and hosts nodes.  Tiny result (≤ #hosts rows),
+        # materialized by the fh node both consumers depend on.
         fh = fetchset.groupBy("host").agg(F.count("*").alias("F_h")).persist()
 
-        def _f_h() -> DataFrame:
-            fut_fh.result()
-            return fh
-
-        def gate_branch():
+        def gate_node():
             """Closed-form dropped/deferred classification (module
             docstring) + per-partition gate counters, one job."""
             rest = (
                 allowed.join(fetchset.select("url"), "url", "left_anti")
-                .join(_f_h(), "host", "left")
+                .join(fh, "host", "left")
                 .withColumn("F_h", F.coalesce(F.col("F_h"), F.lit(0)))
                 .withColumn(
                     "cap_h",
@@ -694,9 +600,9 @@ class SparkCrawler:
             ]
             return rest, rows
 
-        def hosts_branch() -> int:
+        def hosts_node() -> int:
             hosts_next = (
-                hosts_all.join(_f_h(), "host", "left")
+                hosts_all.join(fh, "host", "left")
                 .withColumn(
                     "fetch_total",
                     (
@@ -708,65 +614,41 @@ class SparkCrawler:
             )
             st.write_version("hosts", v["hosts"] + 1, hosts_next)
             # cache hit (the write scanned hosts_all ∪ new_host_rows):
-            # the host-count bookkeeping rides this branch instead of
+            # the host-count bookkeeping rides this node instead of
             # occupying a critical-path job
             return new_host_rows.count()
 
-        def fh_branch() -> int:
-            return fh.count()
+        def harvest_node() -> dict:
+            """A12–A18: fetch → extract → dedup, up to ``fresh``.
 
-        fut_fh = pool.submit(self._timed(self._branch(CRITICAL_POOL, fh_branch)))
-        fut_robots = pool.submit(self._timed(self._branch(LAGGING_POOL, robots_branch)))
-        fut_log = pool.submit(self._timed(self._branch(LAGGING_POOL, log_branch)))
-        fut_gate = pool.submit(self._timed(self._branch(CRITICAL_POOL, gate_branch)))
-        fut_hosts = pool.submit(self._timed(self._branch(CRITICAL_POOL, hosts_branch)))
-        self._prof("fork-side-branches")
+            Runs in the CRITICAL pool when this wave can emit anchors
+            (the loop thread then waits for ``fresh``, which the next
+            frontier needs), and in the HARVEST pool when it cannot
+            (``no_anchor``): the loop then schedules wave w+1's entire
+            schedule+rank chain WHILE this wave fetches/decodes — the
+            profile showed those chains serializing ~35 s of a 4-wave
+            10^6 run at local[16] against otherwise-idle cores.
 
-        def harvest_run() -> dict:
-            """A12–A18: fetch → extract → dedup → seen/bloom/images.
-
-            Runs INLINE on the loop thread when this wave can emit
-            anchors (the next frontier then needs ``fresh``), and on a
-            pool thread (HARVEST_POOL) when it cannot (``no_anchor``):
-            the loop then schedules wave w+1's entire schedule+rank
-            chain WHILE this wave fetches/decodes — the profile showed
-            those chains serializing ~35 s of a 4-wave 10^6 run at
-            local[16] against otherwise-idle cores.
-
-            Cross-wave dependencies are waited HERE, not at wave
-            entry: (a) the previous wave's bloom shard update must be
-            durable before this wave's fused probe (SPEC-4 zero false
+            Its deps are the previous wave's seen and bloom nodes:
+            (a) the previous wave's bloom shard update must be durable
+            before this wave's fused probe (SPEC-4 zero false
             negatives); (b) the previous wave's seen DELTA must be
             durable before the delta-union plan is *built* —
             read_delta_union skips not-yet-written version dirs at
-            plan time, so an early plan would silently drop the
-            newest delta and double-crawl its URLs.
+            plan time, so an early plan would silently drop the newest
+            delta and double-crawl its URLs.
             """
-            prev_h = src.get("_fut_harvest")
-            if prev_h is not None:
-                ph = prev_h.result()
-                ph["fut_seen"].result()
-                ph["fut_bloom"].result()
             seen = st.read_delta_union("seen", v["seen"])
             hmetrics: list[tuple] = []
             hdelta = {"deduped": 0}
 
             # --- A12/A13(+A2+A6): fused fetch+extract+canon+bloom ---
-            if self.use_bloom and self.aligned_probe:
-                from spider_1_spark.engine import bloom as bloom_mod
-
-                refs = ops.fetch_extract(fetchset, self.web_b, bloom=None)
-                refs = bloom_mod.probe(
-                    refs.drop("maybe_seen"), self.bloom, v["seen"]
-                )
-            else:
-                refs = ops.fetch_extract(
-                    fetchset,
-                    self.web_b,
-                    bloom=self.bloom if self.use_bloom else None,
-                    bloom_version=v["seen"],
-                )
-            refs = refs.persist()
+            refs = ops.fetch_extract(
+                fetchset,
+                self.web_b,
+                bloom=self.bloom if self.use_bloom else None,
+                bloom_version=v["seen"],
+            ).persist()
 
             # seen gate (A7): ONLY maybe-seen rows are joined against
             # the seen table (bloom-negative rows are definitely new —
@@ -836,20 +718,19 @@ class SparkCrawler:
             )
             grouped = grouped.persist()
             pidc = F.spark_partition_id().alias("partition_id")
-            # Two SEQUENTIAL linear jobs instead of the r1 3-branch
-            # union: the union's map stages raced the COLD refs/
-            # marked/grouped caches — concurrent stages over a cold
-            # cached frame measured 15-24x per-record CPU inflation at
-            # local[16] (§3d), and here the duplicated partition
-            # compute is the Python fetch/extract stage itself, the
-            # wave's most expensive work.  Job 1 scans `marked`
-            # (materializing refs + marked — the fetch stage runs
-            # exactly once); job 2 aggregates `grouped` (built from
-            # the now-warm marked) in ONE scan yielding both the
-            # intra-wave dup counts and the next-wave anchor count —
-            # the latter (with the gate's deferred count) decides
-            # frontier emptiness WITHOUT waiting for the frontier
-            # parquet write.
+            # Two SEQUENTIAL linear jobs, not one 3-branch union: the
+            # union's map stages raced the COLD refs/marked/grouped
+            # caches — concurrent stages over a cold cached frame
+            # measured 15-24x per-record CPU inflation at local[16]
+            # (§3d), and here the duplicated partition compute is the
+            # Python fetch/extract stage itself, the wave's most
+            # expensive work.  Job 1 scans `marked` (materializing refs
+            # + marked — the fetch stage runs exactly once); job 2
+            # aggregates `grouped` (built from the now-warm marked) in
+            # ONE scan yielding both the intra-wave dup counts and the
+            # next-wave anchor count — the latter (with the gate's
+            # deferred count) decides frontier emptiness WITHOUT
+            # waiting for the frontier parquet write.
             n_anchor_next = 0
             dedup_by_pid: dict[int, int] = {}
             for r in (
@@ -860,7 +741,6 @@ class SparkCrawler:
                 n = int(r["n"] or 0)
                 if n:
                     dedup_by_pid[int(r["partition_id"])] = n
-            self._prof("dedup-marked")
             for r in (
                 grouped.groupBy(pidc)
                 .agg(
@@ -879,220 +759,177 @@ class SparkCrawler:
             for pid, n in sorted(dedup_by_pid.items()):
                 hmetrics.append(("dedup", pid, "deduped", n))
                 hdelta["deduped"] += n
-            self._prof("dedup")
             fresh = grouped.select("url", "first.*")
             fresh = ops.with_host(fresh).persist()
             # materialize ONCE before three concurrent consumers fork —
             # a cold persisted frame hit by parallel jobs computes
             # per-job
             fresh.count()
-            self._prof("fresh-materialize")
-
-            def images_branch():
-                """A14/A15/A16: decode + verify + phash + sink."""
-                img_refs = fresh.filter(F.col("kind") == "img")
-                decoded = ops.decode_images(img_refs, self.web_b).persist()
-                rows = [
-                    ("decode", pid, "decode_failed", n)
-                    for pid, n in self._pcount_rows(
-                        decoded.filter(~F.col("ok"))
-                    )
-                ]
-                st.write_wave(
-                    "images",
-                    wave,
-                    decoded.filter(F.col("ok")).select(
-                        "image_id", "bytes", "w", "h", "fmt", "caption",
-                        "phash",
-                    ),
-                )
-                decoded.unpersist()
-                return rows
-
-            def seen_branch() -> None:
-                # delta write: only this wave's new URLs (append-only)
-                seen_new = fresh.select(
-                    "url",
-                    "host_hash",
-                    F.lit(wave).alias("first_wave"),
-                    (F.col("parent_depth") + 1).alias("depth"),
-                    F.col("seq").alias("parent_rank"),
-                    F.col("pos").alias("link_pos"),
-                )
-                st.write_version("seen", v["seen"] + 1, seen_new)
-
-            def bloom_branch() -> None:
-                # A18: OR the new URLs' bits into the bloom shards.
-                # Runs AFTER the seen write but outside the critical
-                # join: the next wave needs the shards only at its
-                # FETCH stage, not at schedule time.  It MUST complete
-                # before this wave's manifest commit: a committed
-                # manifest with missing shard bits would give the
-                # resume path bloom false negatives (SPEC-4).
-                if self.use_bloom:
-                    from spider_1_spark.engine import bloom as bloom_mod
-
-                    bloom_mod.update(
-                        st.read_version("seen", v["seen"] + 1).select("url"),
-                        self.bloom,
-                        v["seen"],
-                        v["seen"] + 1,
-                    )
-
-            def _submit(fn):
-                # Under no_anchor pipelining harvest_run itself runs in
-                # a pool thread; if the loop thread's failure drain has
-                # already shutdown() this pool, submit raises a bare
-                # "cannot schedule new futures after shutdown"
-                # RuntimeError inside an abandoned future (ADVICE r2).
-                # Harmless — the manifest never commits and resume
-                # replays the wave — but re-raise it with the context
-                # so a debugger reading the abandoned future's
-                # exception isn't chasing a phantom scheduling bug.
-                try:
-                    return pool.submit(fn)
-                except RuntimeError as e:
-                    raise RuntimeError(
-                        "harvest sub-branch not scheduled: the wave "
-                        "pool was shut down by a concurrent wave "
-                        "failure (this wave never commits; resume "
-                        "replays it)"
-                    ) from e
-
-            fut_images = _submit(
-                self._timed(self._branch(LAGGING_POOL, images_branch))
-            )
-            fut_seen = _submit(
-                self._timed(self._branch(CRITICAL_POOL, seen_branch))
-            )
-
-            def bloom_after_seen() -> None:
-                fut_seen.result()
-                bloom_branch()
-
-            fut_bloom = _submit(
-                self._timed(self._branch(LAGGING_POOL, bloom_after_seen))
-            )
+            dag.cached.extend([refs, marked, grouped, fresh])
             return {
                 "metrics": hmetrics,
                 "cdelta": hdelta,
                 "n_anchor": n_anchor_next,
                 "fresh": fresh,
-                "fut_images": fut_images,
-                "fut_seen": fut_seen,
-                "fut_bloom": fut_bloom,
-                "unpersist": [refs, marked, grouped, fresh],
             }
 
-        def _deferred_frontier(rest: DataFrame) -> DataFrame:
-            return rest.filter(F.col("status") == "deferred").select(
+        def images_node():
+            """A14/A15/A16: decode + verify + phash + sink."""
+            fresh = dag.result("harvest")["fresh"]
+            img_refs = fresh.filter(F.col("kind") == "img")
+            decoded = ops.decode_images(img_refs, self.web_b).persist()
+            rows = [
+                ("decode", pid, "decode_failed", n)
+                for pid, n in self._pcount_rows(decoded.filter(~F.col("ok")))
+            ]
+            st.write_wave(
+                "images",
+                wave,
+                decoded.filter(F.col("ok")).select(
+                    "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
+                ),
+            )
+            decoded.unpersist()
+            return rows
+
+        def seen_node() -> None:
+            # delta write: only this wave's new URLs (append-only)
+            fresh = dag.result("harvest")["fresh"]
+            seen_new = fresh.select(
+                "url",
+                "host_hash",
+                F.lit(wave).alias("first_wave"),
+                (F.col("parent_depth") + 1).alias("depth"),
+                F.col("seq").alias("parent_rank"),
+                F.col("pos").alias("link_pos"),
+            )
+            st.write_version("seen", v["seen"] + 1, seen_new)
+
+        def bloom_node() -> None:
+            # A18: OR the new URLs' bits into the bloom shards.  Runs
+            # AFTER the seen write but off the critical path: the next
+            # wave needs the shards only at its FETCH stage, not at
+            # schedule time.  It completes before this wave's manifest
+            # commit: a committed manifest with missing shard bits
+            # would give the resume path bloom false negatives (SPEC-4).
+            from spider_1_spark.engine import bloom as bloom_mod
+
+            bloom_mod.update(
+                st.read_version("seen", v["seen"] + 1).select("url"),
+                self.bloom,
+                v["seen"],
+                v["seen"] + 1,
+            )
+
+        fh_node = dag.add("fh", CRITICAL_POOL, fh.count)
+        dag.add("log", LAGGING_POOL, log_node)
+        dag.add("gate", CRITICAL_POOL, gate_node, deps=[fh_node])
+        dag.add("hosts", CRITICAL_POOL, hosts_node, deps=[fh_node])
+        # the previous wave's seen and bloom writes (see harvest_node)
+        prev = src.get("_dag")
+        prev_writes = (
+            []
+            if prev is None
+            else [prev.nodes[n] for n in ("seen", "bloom") if n in prev.nodes]
+        )
+        harvest = dag.add(
+            "harvest",
+            HARVEST_POOL if no_anchor else CRITICAL_POOL,
+            harvest_node,
+            deps=prev_writes,
+        )
+        dag.add("images", LAGGING_POOL, images_node, deps=[harvest])
+        seen_n = dag.add("seen", CRITICAL_POOL, seen_node, deps=[harvest])
+        if self.use_bloom:
+            dag.add("bloom", LAGGING_POOL, bloom_node, deps=[seen_n])
+
+        # next frontier = fresh anchors at depth+1 ∪ deferred rows.
+        # Under no_anchor it is exactly the deferred rows, so it closes
+        # from the GATE alone while the harvest overlaps the next
+        # wave's schedule+rank.
+        if no_anchor:
+            fresh_anchors = None
+            n_anchor_next = 0
+        else:
+            H = dag.result("harvest")
+            fresh_anchors = H["fresh"].filter(F.col("kind") == "a")
+            n_anchor_next = H["n_anchor"]
+        rest, gate_rows = dag.result("gate")
+        for _, pid, status, n in gate_rows:
+            cdelta[status] += n
+        metrics.extend(gate_rows)
+        nf_plan = rest.filter(F.col("status") == "deferred").select(
+            "url",
+            "host",
+            "host_hash",
+            "depth",
+            "parent_rank",
+            "link_pos",
+            "discovered_wave",
+            F.lit("DEFERRED").alias("state"),
+        )
+        if fresh_anchors is not None:
+            nf_plan = fresh_anchors.select(
                 "url",
                 "host",
                 "host_hash",
-                "depth",
-                "parent_rank",
-                "link_pos",
-                "discovered_wave",
-                F.lit("DEFERRED").alias("state"),
-            )
-
-        def _next_frontier(rest: DataFrame, fresh: DataFrame) -> DataFrame:
-            # next frontier = fresh anchors at depth+1  ∪  deferred
-            return (
-                fresh.filter(F.col("kind") == "a")
-                .select(
-                    "url",
-                    "host",
-                    "host_hash",
-                    (F.col("parent_depth") + 1).alias("depth"),
-                    F.col("seq").alias("parent_rank"),
-                    F.col("pos").alias("link_pos"),
-                    F.lit(wave).alias("discovered_wave"),
-                    F.lit("PENDING").alias("state"),
-                )
-                .unionByName(_deferred_frontier(rest))
-            )
-
-        def frontier_branch(nf: DataFrame) -> None:
-            # explicit host-hash range partitioning on the persisted
-            # frontier (BASELINE.json:6 "explicit repartitionByRange").
-            # This write LAGS: the next wave consumes the in-memory
-            # handoff plan, so only the commit (and resume) depends on
-            # the parquet — it overlaps the next wave's critical path
-            # exactly like the log/image sinks.
-            st.write_version(
-                "frontier",
-                v["frontier"] + 1,
-                nf.repartitionByRange(
-                    max(1, self._shuffle_partitions()),
-                    F.col("host_hash"),
-                    F.col("url"),
-                ),
-            )
-
-        if no_anchor:
-            # ---- depth-exhausted pipelining: the next frontier is
-            # exactly this wave's deferred rows, so it closes from the
-            # GATE alone; the fetch/decode stage moves to a pool
-            # thread and overlaps the next wave's schedule+rank.
-            fut_harvest = pool.submit(
-                self._timed(self._branch(HARVEST_POOL, harvest_run))
-            )
-            rest, gate_rows = fut_gate.result()
-            for _, pid, status, n in gate_rows:
-                cdelta[status] += n
-            metrics.extend(gate_rows)
-            H = None
-            n_anchor_next = 0
-        else:
-            # anchors possible: the next frontier needs `fresh`, so
-            # the harvest runs inline (the pre-r2 shape).
-            from concurrent.futures import Future
-
-            fut_harvest = Future()
-            try:
-                fut_harvest.set_result(harvest_run())
-            except BaseException as e:
-                fut_harvest.set_exception(e)
-                raise
-            H = fut_harvest.result()
-            rest, gate_rows = fut_gate.result()
-            for _, pid, status, n in gate_rows:
-                cdelta[status] += n
-            metrics.extend(gate_rows)
-            n_anchor_next = H["n_anchor"]
-
+                (F.col("parent_depth") + 1).alias("depth"),
+                F.col("seq").alias("parent_rank"),
+                F.col("pos").alias("link_pos"),
+                F.lit(wave).alias("discovered_wave"),
+                F.lit("PENDING").alias("state"),
+            ).unionByName(nf_plan)
         # lazy localCheckpoint: truncates the LOGICAL plan to a
         # LogicalRDD — without it the handoff chains every prior
         # wave's plan into the next (geometric plan growth; the
         # optimizer/explain pass OOMs after ~8 waves).  The write
-        # branch and the next wave's first job share the materialized
+        # node and the next wave's first job share the materialized
         # blocks; released at the NEXT wave's commit (or the loop
         # tail), and on block loss the recovery is resume-from-
         # manifest, same as fetchset.
-        nf_plan = (
-            _deferred_frontier(rest)
-            if H is None
-            else _next_frontier(rest, H["fresh"])
-        )
         next_frontier = nf_plan.localCheckpoint(eager=False)
-        fut_frontier = pool.submit(
-            self._timed(self._branch(LAGGING_POOL, frontier_branch)),
-            next_frontier,
+        # explicit host-hash range partitioning on the persisted
+        # frontier (BASELINE.json:6 "explicit repartitionByRange").
+        # This write LAGS: the next wave consumes the in-memory handoff
+        # plan, so only the commit (and resume) depends on the parquet
+        # — it overlaps the next wave's critical path exactly like the
+        # log/image sinks.
+        dag.add(
+            "frontier",
+            LAGGING_POOL,
+            lambda: st.write_version(
+                "frontier",
+                v["frontier"] + 1,
+                next_frontier.repartitionByRange(
+                    max(1, self._shuffle_partitions()),
+                    F.col("host_hash"),
+                    F.col("url"),
+                ),
+            ),
         )
-        self._prof("gate-join")
 
-        # --- join the branches the NEXT wave reads -------------------
-        # (seen/bloom are NOT joined here: the next wave's harvest
-        # waits on them via _fut_harvest before building its plans)
-        n_new = fut_hosts.result()
+        # --- wait for the nodes the NEXT wave reads ------------------
+        # (seen/bloom are not waited for here: the next wave's harvest
+        # depends on them)
+        n_new = dag.result("hosts")
         # frontier emptiness from already-collected counters — the
         # next-frontier rows are EXACTLY fresh anchors + deferred, so
         # no job (and no wait on the lagging write) is needed
         frontier_empty = (n_anchor_next + cdelta["deferred"]) == 0
-        self._prof("critical-join")
         global_fetched = src["global_fetched"] + n_fetched
-
+        dag.cached.extend([
+            df
+            for df in (
+                fr, new_host_rows, fetchset, fh, rest,
+                ranked._rank_source,
+                getattr(cand, "_aux_persist", None),
+                # the PREVIOUS wave's frontier handoff: fully consumed
+                # once this wave's fr is materialized and that wave's
+                # write has committed (ordered before this commit)
+                src.get("_frontier_df"),
+            )
+            if df is not None
+        ])
         return {
             # next-wave inputs (same keys a committed manifest has)
             "wave_id": wave,
@@ -1109,60 +946,37 @@ class SparkCrawler:
             # cached until this wave's commit, which runs after the
             # next wave's critical path)
             "_frontier_df": next_frontier,
-            # lagging work joined by _wave_commit
-            "_futs": {
-                "robots": fut_robots,
-                "log": fut_log,
-                "frontier": fut_frontier,
-            },
-            "_fut_harvest": fut_harvest,
-            "_pool": pool,
+            "_dag": dag,
             "_metrics": metrics,
             "_cdelta": cdelta,
-            "_unpersist": [
-                fr, new_host_rows, fetchset, fh, rest,
-                ranked._rank_source,
-                getattr(cand, "_aux_persist", None),
-                # the PREVIOUS wave's frontier handoff: fully consumed
-                # once this wave's fr is materialized and that wave's
-                # write has committed (ordered before this commit)
-                src.get("_frontier_df"),
-            ],
         }
 
     def _wave_commit(self, pending: dict, prev_manifest: dict) -> dict:
-        """Join wave w's lagging branches, write its metrics table,
-        commit its manifest (the ordered, atomic commit point), release
-        its cached frames.  Runs after wave w+1's critical path — the
-        image decode/sink and crawl-log writes it waits on overlap that
+        """Wait for wave w's nodes, write its metrics table, commit its
+        manifest (the ordered, atomic commit point), release its cached
+        frames.  Runs after wave w+1's critical path — the image
+        decode/sink and crawl-log writes it waits for overlap that
         compute."""
         st = self.store
         wave = pending["wave_id"]
+        dag = pending["_dag"]
         metrics = pending["_metrics"]
         cdelta = pending["_cdelta"]
-        # the harvest (fetch/dedup/seen/images/bloom) may still be
-        # running under depth-exhausted pipelining — join it first,
-        # then its sub-branches
-        H = pending["_fut_harvest"].result()
+        # the harvest may still be running under depth-exhausted
+        # pipelining
+        H = dag.result("harvest")
         metrics.extend(H["metrics"])
         for k, n in H["cdelta"].items():
             cdelta[k] = cdelta.get(k, 0) + n
-        for row in pending["_futs"]["robots"].result():
-            metrics.append(row)
-            cdelta["robots_blocked"] += row[3]
-        for row in H["fut_images"].result():
+        for row in dag.result("images"):
             metrics.append(row)
             cdelta["decode_failed"] += row[3]
-        pending["_futs"]["log"].result()
-        # the frontier parquet must be durable before the manifest
-        # rename names its version (resume reads it from disk)
-        pending["_futs"]["frontier"].result()
-        # seen delta + deferred bloom update must be durable before
-        # the manifest rename (resume would otherwise see missing
-        # shard bits = bloom false negatives, breaking SPEC-4 dedup)
-        H["fut_seen"].result()
-        H["fut_bloom"].result()
-        pending["_pool"].shutdown(wait=True)
+        # every write is durable before the manifest rename names its
+        # version: resume reads the frontier parquet from disk, and a
+        # missing seen delta or missing bloom shard bits would give
+        # resume bloom false negatives (SPEC-4)
+        dag.drain()
+        dag.describe("commit")
         st.write_wave("metrics", wave, self._metrics_df(wave, metrics))
 
         counters = dict(prev_manifest["counters"])
@@ -1178,10 +992,8 @@ class SparkCrawler:
             "done": pending["done"],
         }
         st.commit(new_manifest)
-        for df in pending["_unpersist"] + H["unpersist"]:
-            if df is not None:
-                _release_cached(df)
-        self._prof(f"w{wave} commit")
+        for df in dag.cached:
+            _release_cached(df)
         return new_manifest
 
     # -------------------------------------------------------- helpers

@@ -26,8 +26,6 @@ Scale notes (the 100 TB / 10^10-URL design points, SURVEY §6):
 from __future__ import annotations
 
 import json
-import os
-import time
 from typing import Iterator
 
 import pandas as pd
@@ -47,12 +45,6 @@ from spider_1_spark.reference_model.spider1_ref import image_id_of
 # sort key shared by every ordering decision (SPEC-3); url is a
 # tiebreak only (keys are unique by construction, see spider1_ref).
 KEY_COLS = ["depth", "parent_rank", "link_pos", "url"]
-
-def _prof(label: str) -> None:
-    """SPIDER1_PROFILE=1: timestamped marker around job boundaries."""
-    if os.environ.get("SPIDER1_PROFILE"):
-        print(f"[op-prof] {label}: @{time.time() % 10000:.1f}", flush=True)
-
 
 # budgets up to this take the salted-window path in candidate_set;
 # larger budgets (where salting cannot shrink anything) take the
@@ -310,7 +302,6 @@ def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
     # at local[16] (BENCH/BASELINE.md §3d) while being invisible at
     # local[4].  This job is also `part`'s single cache-materializing
     # job: everything downstream reads it warm.
-    _prof("grouped_topk stats-collect start")
     w_span = Window.partitionBy("host")
     stats = (
         per.withColumn("np", F.count("*").over(w_span))
@@ -318,7 +309,6 @@ def _grouped_topk(over: DataFrame, num_partitions: int | None) -> DataFrame:
         .drop("np")
         .collect()
     )
-    _prof("grouped_topk stats-collect done")
     offsets: dict[tuple[int, str | None], int] = {}
     per_host: dict[str | None, int] = {}
     # None-safe sort key: nulls sort FIRST in the range partitioning,
@@ -426,7 +416,6 @@ def with_global_rank(
         .withColumn("_mid", F.monotonically_increasing_id())
     )
     part = part.persist()
-    _prof("global_rank counts-collect start")
     stats = {
         r["_pid"]: (r["cnt"], r["m0"], r["m1"])
         for r in part.groupBy("_pid")
@@ -437,7 +426,6 @@ def with_global_rank(
         )
         .collect()
     }
-    _prof("global_rank counts-collect done")
     acc = 0
     offs: dict[int, int] = {}  # pid -> (global offset - min mid)
     for pid in sorted(stats):
@@ -459,27 +447,13 @@ def with_global_rank(
             )
         offs[pid] = acc - m0
         acc += cnt
-    if len(offs) <= 64:
-        # per-row linear when-chain: zero extra plan nodes, fine for
-        # sandbox partition counts
-        expr = F.lit(0)
-        base = [
-            F.when(F.col("_pid") == pid, F.lit(off))
-            for pid, off in offs.items()
-        ]
-        if base:
-            expr = F.coalesce(*base, F.lit(0))
-        ranked = part.withColumn(out_col, F.col("_mid") + expr)
-    else:
-        # thousands of partitions (cluster scale): broadcast-join a
-        # tiny offsets frame instead of compiling a P-branch CASE
-        off_df = spark.createDataFrame(
-            list(offs.items()), "_pid int, _goff long"
-        )
-        ranked = part.join(F.broadcast(off_df), "_pid", "left").withColumn(
-            out_col, F.col("_mid") + F.coalesce(F.col("_goff"), F.lit(0))
-        ).drop("_goff")
-    ranked = ranked.drop("_pid", "_mid")
+    # one literal array indexed by _pid, JVM-side for any partition
+    # count; empty partitions collect no stats and get offset 0
+    n_pids = max(offs, default=0) + 1
+    goff = F.array(*[F.lit(offs.get(p, 0)).cast("long") for p in range(n_pids)])
+    ranked = part.withColumn(
+        out_col, F.col("_mid") + F.element_at(goff, F.col("_pid") + 1)
+    ).drop("_pid", "_mid")
     ranked._rank_source = part  # handle for the caller to unpersist
     return ranked
 
@@ -595,12 +569,3 @@ def decode_images(img_refs: DataFrame, web_b) -> DataFrame:
                 )
 
     return img_refs.select("url", "caption").mapInPandas(gen, IMG_OUT_SCHEMA)
-
-
-# ------------------------------------------------------------------ A20
-
-def partition_counts(df: DataFrame, name: str) -> DataFrame:
-    """A20: per-partition lineage counter for one stage (SPEC-11)."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias(name)
-    )

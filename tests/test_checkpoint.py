@@ -12,6 +12,8 @@ import json
 import os
 import shutil
 import tempfile
+import threading
+import time
 
 import pytest
 
@@ -109,20 +111,40 @@ def test_crash_residue_rolled_back(spark, oracle):
         shutil.rmtree(root, ignore_errors=True)
 
 
-class SeenV0WriteFails:
-    """State store that raises inside ``write_version("seen", 0)`` —
-    a fault in one branch of the concurrent wave -1 seeding."""
+class FailingStore:
+    """State store that raises inside one ``method(table, version, ...)``
+    call — a fault injected into one node of the wave DAG."""
 
-    def __init__(self, inner):
+    def __init__(self, inner, method, table, version):
         self.inner = inner
+        self.fault = (method, table, version)
 
     def __getattr__(self, name):
-        return getattr(self.inner, name)
+        attr = getattr(self.inner, name)
+        if name != self.fault[0]:
+            return attr
 
-    def write_version(self, name, version, df):
-        if (name, version) == ("seen", 0):
-            raise OSError("injected seen v0 write failure")
-        self.inner.write_version(name, version, df)
+        def call(table, version, *args):
+            if (name, table, version) == self.fault:
+                raise OSError(f"injected {table} v{version} {name} failure")
+            return attr(table, version, *args)
+
+        return call
+
+
+def engine_threads() -> list[str]:
+    return [
+        t.name for t in threading.enumerate() if t.name.startswith("spider1-")
+    ]
+
+
+def file_stats(root: str) -> dict[str, tuple[int, int]]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.join(d, f)] = (st.st_size, st.st_mtime_ns)
+    return out
 
 
 def test_seeding_branch_failure_drains_and_resumes(spark, oracle):
@@ -130,23 +152,61 @@ def test_seeding_branch_failure_drains_and_resumes(spark, oracle):
     the other seeding branches finished: no seeding thread is alive,
     no manifest is committed, and a fresh run() on the same root
     matches the oracle."""
-    import threading
-
     from spider_1_spark.engine.state import ParquetSnapshotStore
 
     web = SyntheticWeb(N_HOSTS)
     seeds = make_seeds(N_SEEDS, N_HOSTS)
     root = tempfile.mkdtemp(prefix="spider1_seedfail_")
     try:
-        store = SeenV0WriteFails(ParquetSnapshotStore(spark, root))
+        store = FailingStore(
+            ParquetSnapshotStore(spark, root), "write_version", "seen", 0
+        )
         with pytest.raises(OSError, match="injected seen v0"):
             SparkCrawler(spark, POLICY, web, root, store=store).run(seeds)
-        assert not [
-            t.name for t in threading.enumerate() if t.name.startswith("seed")
-        ]
+        assert not engine_threads()
         assert store.read_manifest() is None
 
         art = SparkCrawler(spark, POLICY, web, root).run(seeds)
+        log, seen, images, counters, waves = collect(art)
+        assert log == [tuple(t) for t in oracle.crawl_log]
+        assert seen == oracle.seen
+        assert images == sorted(oracle.images)
+        assert counters == oracle.counters
+        assert waves == oracle.n_waves
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "fault",
+    [
+        # wave 0's lagging image sink, which overlaps wave 1's critical
+        # path and is first waited for at wave 0's commit
+        ("write_wave", "images", 0),
+        # wave 1's seen delta, a dependency of wave 2's harvest
+        ("write_version", "seen", 2),
+    ],
+    ids=["images-w0", "seen-v2"],
+)
+def test_pipelined_node_failure_drains_and_resumes(spark, oracle, fault):
+    """A node failing inside the pipelined wave DAG surfaces at run()'s
+    caller with no engine thread alive and no file under the state
+    root still changing; resume() then matches the oracle exactly."""
+    from spider_1_spark.engine.state import ParquetSnapshotStore
+
+    web = SyntheticWeb(N_HOSTS)
+    seeds = make_seeds(N_SEEDS, N_HOSTS)
+    root = tempfile.mkdtemp(prefix="spider1_nodefail_")
+    try:
+        store = FailingStore(ParquetSnapshotStore(spark, root), *fault)
+        with pytest.raises(OSError, match="injected"):
+            SparkCrawler(spark, POLICY, web, root, store=store).run(seeds)
+        assert not engine_threads()
+        files = file_stats(root)
+        time.sleep(1.0)
+        assert file_stats(root) == files
+
+        art = SparkCrawler(spark, POLICY, web, root).resume()
         log, seen, images, counters, waves = collect(art)
         assert log == [tuple(t) for t in oracle.crawl_log]
         assert seen == oracle.seen
